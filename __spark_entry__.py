@@ -75,14 +75,14 @@ _PRIORITY = [
 # query_hash_snapshot.json: editing a query without pinning it here
 # fails CI.
 _FRESH = [
-    "chunk_eval_f1",          # r7: join → single-pass flag aggregate
-    "salience_topk_tokens",   # r7: window → in-array top-3 projection
-    "word_boundary_merge",    # r7: window+groupBy → per-doc fold
-    "streaming_tumbling_minute",   # r7: state partitions right-sized
-    "streaming_curation_counts",   # r7: one-shot rep gate + memo schema
-    "streaming_kg_triple_counts",  # r7: 1x-cores micro-batch widening
-    "streaming_dedup_keeper",      # r7: \\A..\\z anchors + memo schema
-    "corpus_curation",        # r7: one-shot rep-gate expression
+    "ann_ivf_lists",               # codebook keyed on the corpus
+    "ann_ivf_topk",                # codebook keyed on the corpus
+    "ann_pq_topk",                 # codebooks/codes keyed on the corpus
+    "pack_sequences_bpe",          # counts table on the shared cache
+    "streaming_tumbling_minute",   # scoped shuffle-partitions helper
+    "streaming_curation_counts",   # scoped shuffle-partitions helper
+    "streaming_kg_triple_counts",  # scoped shuffle-partitions helper
+    "streaming_dedup_keeper",      # scoped shuffle-partitions helper
 ]
 
 def _folded() -> frozenset:
@@ -106,19 +106,22 @@ def query_fingerprints() -> dict[str, str]:
     it in _FRESH (so this round's gate covers it) or refreshing the
     snapshot deliberately.  The oracle string is normalized over the
     per-SF golden tag so the hash is identical under pytest
-    (sf0_001) and the driver gate (sf0_01).  Scope note: helper
-    modules a query delegates to are not hashed — a dedup.py edit
-    shows up here only if the query function or oracle text moved;
-    pytest's full contract run remains the backstop for those."""
+    (sf0_001) and the driver gate (sf0_01), and over the package
+    directory so it is identical from any checkout path.  Scope
+    note: helper modules a query delegates to are not hashed — a
+    dedup.py edit shows up here only if the query function or oracle
+    text moved; pytest's full contract run remains the backstop for
+    those."""
     import hashlib
     import inspect
 
     from lacspark import queries as q
 
+    pkg = os.path.dirname(os.path.abspath(q.__file__))
     out = {}
     for name, fn in q.SPARK_QUERIES.items():
         sql = q.ORACLE_SQL.get(name, "").replace(
-            f"{q.GOLDEN_TAG}/", "<SFTAG>/")
+            f"{q.GOLDEN_TAG}/", "<SFTAG>/").replace(pkg, "<PKG>")
         src = inspect.getsource(fn)
         out[name] = hashlib.sha256(
             (sql + "\n" + src).encode()).hexdigest()

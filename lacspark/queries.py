@@ -20,6 +20,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .spark import memo
+from .spark.session import shuffle_partitions
+
 SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
 
@@ -48,46 +51,18 @@ def register(name: str, sql: str | None = None):
     return deco
 
 
-_LOAD_MEMO: dict = {}
-
-
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Read one testdata table, memoized per (session, path).
+    """Read one testdata table, its schema memoized per (session,
+    file identity).
 
-    ``spark.read.parquet`` re-runs the file-listing + footer-schema
-    job on every call; the returned DataFrame is an immutable lazy
-    plan over a static path, so reusing it across query invocations
-    in the same session is semantics-free and saves one driver job
-    per warm query (a catalog would give this for free via its
-    metadata cache — this is the path-based stand-in)."""
+    ``spark.read.parquet`` re-runs the footer-schema inference job on
+    every call; a schema cached on the path's recursive stat walk
+    (spark.memo) skips it while any rewrite below the path — a nested
+    partition directory included — forces a fresh inference."""
     path = f"{sf_dir}/{table}.parquet"
-    # file identity rides the key (size + mtime_ns, the
-    # files_fingerprint discipline): a path rewritten in-session must
-    # MISS, or the memoized FileIndex serves deleted part files /
-    # stale rows.  st of a directory changes when its entries do.
-    try:
-        st = os.stat(path)
-        if os.path.isdir(path):
-            # a directory's own stat misses an in-place rewrite of an
-            # existing part file (same name, same entry count) — fold
-            # the entries' identity in too (ADVICE r6)
-            with os.scandir(path) as it:
-                entries = tuple(sorted(
-                    (e.name, e.stat().st_size, e.stat().st_mtime_ns)
-                    for e in it))
-            ident = (st.st_size, st.st_mtime_ns, entries)
-        else:
-            ident = (st.st_size, st.st_mtime_ns)
-    except OSError:
-        ident = None  # let spark.read raise its own error
-    key = (spark.sparkContext.applicationId, path, ident)
-    df = _LOAD_MEMO.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        while len(_LOAD_MEMO) > 64:  # evict oldest, not everything
-            _LOAD_MEMO.pop(next(iter(_LOAD_MEMO)))
-        _LOAD_MEMO[key] = df
-    return df
+    schema = memo.cached(f"load:{table}", memo.path_key(path), (), spark,
+                         lambda: spark.read.parquet(path).schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 # helpers — Spark side
@@ -227,7 +202,7 @@ def streaming_tumbling_minute(spark, sf_dir):
     equivalent to its batch twin."""
     import uuid
 
-    schema = load(spark, sf_dir, "events").schema  # memoized listing
+    schema = load(spark, sf_dir, "events").schema  # memoized schema
     # the file source wants a directory — glob the events file out of
     # the sf dir
     stream = (spark.readStream.schema(schema)
@@ -247,15 +222,11 @@ def streaming_tumbling_minute(spark, sf_dir):
     # flat-best) — same scoped set/restore pattern as the other
     # streaming gates; the partition count lives in the checkpoint
     # from query start, so later batch queries are unaffected.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_partitions(spark, 8):
         q = (agg.writeStream.trigger(availableNow=True)
              .format("memory").queryName(sink)
              .outputMode("complete").start())
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(sink).select(
         F.unix_timestamp(F.col("win.start")).cast("bigint")
         .alias("window_start"),
@@ -279,7 +250,7 @@ def streaming_kg_triple_counts(spark, sf_dir):
 
     from .spark.tagger import tag_and_extract
 
-    schema = load(spark, sf_dir, "documents").schema  # memoized listing
+    schema = load(spark, sf_dir, "documents").schema  # memoized schema
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1)
               .option("pathGlobFilter", "documents.parquet")
@@ -301,15 +272,11 @@ def streaming_kg_triple_counts(spark, sf_dir):
     # dominates at this key count; same scoped set/restore pattern as
     # streaming_curation_counts).  The explicit repartition above is
     # unaffected — the CPU-bound tag UDF keeps its wide micro-batch.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_partitions(spark, 8):
         q = (agg.writeStream.trigger(availableNow=True)
              .format("memory").queryName(sink)
              .outputMode("complete").start())
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(sink)
 
 
@@ -1365,7 +1332,7 @@ def streaming_curation_counts(spark, sf_dir):
 
     from .spark.quality import with_repetition_keep
 
-    schema = load(spark, sf_dir, "documents").schema  # memoized listing
+    schema = load(spark, sf_dir, "documents").schema  # memoized schema
     # availableNow with DEFAULT file batching: the gates are stateless
     # projections, so per-file micro-batches + a per-batch repartition
     # (the round-4 shape) bought nothing but trigger overhead — one
@@ -1394,15 +1361,11 @@ def streaming_curation_counts(spark, sf_dir):
     # at query START (it lives in the checkpoint thereafter), so the
     # scoped set/restore is safe for concurrent batch queries planned
     # after the restore.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_partitions(spark, 8):
         q = (agg.writeStream.trigger(availableNow=True)
              .format("memory").queryName(sink)
              .outputMode("complete").start())
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(sink)
 
 
@@ -1446,7 +1409,7 @@ def streaming_dedup_keeper(spark, sf_dir):
 
     from .spark.streaming import streaming_dedup
 
-    schema = load(spark, sf_dir, "documents").schema  # memoized listing
+    schema = load(spark, sf_dir, "documents").schema  # memoized schema
     stream = (spark.readStream.schema(schema)
               .option("pathGlobFilter", "documents.parquet")
               .parquet(sf_dir)
@@ -1470,15 +1433,11 @@ def streaming_dedup_keeper(spark, sf_dir):
     sink = f"stream_dedup_{uuid.uuid4().hex[:8]}"
     # per-key state rides the shuffle: n_langs keys → 8 partitions
     # (same scoped set/restore rationale as streaming_curation_counts)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_partitions(spark, 8):
         q = (deduped.writeStream.trigger(availableNow=True)
              .format("memory").queryName(sink)
              .outputMode("append").start())
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(sink).select("lang", "fingerprint")
 
 
@@ -1503,9 +1462,6 @@ def token_class_counts(spark, sf_dir):
         F.size(F.regexp_extract_all(
             "text", F.lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"), F.lit(0)))
         .alias("n_bpe_ish"))
-
-
-_PACK_BPE_CACHE: dict = {}
 
 
 @register("token_count_bpe", _golden_sql("token_count_bpe"))
@@ -1548,26 +1504,21 @@ def pack_sequences_bpe(spark, sf_dir, shard_docs: int = 200):
     packs — proving the packing machinery survives contact with an
     actual tokenizer.  Oracle: the identical window over the
     token_count_bpe golden counts."""
-    from .spark.dedup import input_fingerprint, slot_persist
     from .spark.subword import with_subword_counts
     docs = load(spark, sf_dir, "documents")
-    d = with_subword_counts(docs)
     # BOTH prefix-sum branches (within-shard window + per-shard
-    # totals) consume the counts; the single-slot persist runs the
+    # totals) consume the counts; the cached persist runs the
     # tokenizer UDF pass ONCE per corpus instead of once per branch
     # (lazy — plan-only consumers never execute it; an eager
     # localCheckpoint here ran the UDF at construction time and hid
     # the plan from inspection)
-    t = d.select("doc_id", "lang",
-                 F.col("__sw.n_subwords").alias("n_subwords"),
-                 (F.col("doc_id") / shard_docs).cast("bigint")
-                 .alias("__shard"))
-    # input_fingerprint = file identity + canonicalized-plan digest,
-    # so a transformed `docs` over the same files can't hit the
-    # raw-scan cache entry (ADVICE r4)
-    ident = input_fingerprint(docs)
-    t = slot_persist(_PACK_BPE_CACHE,
-                     (ident, shard_docs) if ident else None, t)
+    t = memo.cached(
+        "pack_bpe_counts", memo.frame_key(docs), (shard_docs,), spark,
+        lambda: with_subword_counts(docs).select(
+            "doc_id", "lang",
+            F.col("__sw.n_subwords").alias("n_subwords"),
+            (F.col("doc_id") / shard_docs).cast("bigint")
+            .alias("__shard")))
     w_in = (Window.partitionBy("lang", "__shard").orderBy("doc_id")
             .rowsBetween(Window.unboundedPreceding, 0))
     within = t.withColumn(
@@ -2138,8 +2089,7 @@ def ann_ivf_lists(spark, sf_dir):
     from .spark.similarity import ivf_list_sizes
     e = load(spark, sf_dir, "embeddings")
     return ivf_list_sizes(e, "vec_id", "embedding", _IVF_DIM,
-                          n_lists=_IVF_K, iters=_IVF_ITERS,
-                          memo_key=sf_dir)
+                          n_lists=_IVF_K, iters=_IVF_ITERS)
 
 
 @register("ann_ivf_topk", _ivf_oracle_ctes() + """
@@ -2166,8 +2116,7 @@ def ann_ivf_topk(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
     return ivf_topk(e.filter(F.col("vec_id") < 50), e,
                     "vec_id", "embedding", _IVF_DIM,
-                    k=5, nprobe=3, n_lists=_IVF_K, iters=_IVF_ITERS,
-                    memo_key=sf_dir) \
+                    k=5, nprobe=3, n_lists=_IVF_K, iters=_IVF_ITERS) \
         .select("query_id", "neighbor_id", "rnk")
 
 
@@ -2304,7 +2253,7 @@ def ann_pq_topk(spark, sf_dir):
     return pq_topk(e.filter(F.col("vec_id") < 50), e,
                    "vec_id", "embedding", 64, k=5, m=_PQ_M,
                    n_cents=_PQ_K, iters=_PQ_ITERS,
-                   rerank=_PQ_RERANK, memo_key=sf_dir) \
+                   rerank=_PQ_RERANK) \
         .select("query_id", "neighbor_id", "rnk")
 
 

@@ -509,11 +509,3 @@ def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
                                                T.StringType())])
     return df.mapInPandas(run, schema=out_schema)
 
-
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize is a per-payload transform; without a codec we record
-    the intent in metadata columns (the plumbing the judge can check)
-    and keep the payload opaque."""
-    return (df.withColumn("target_width", F.lit(width))
-            .withColumn("target_height", F.lit(height))
-            .withColumn("resize_status", F.lit("stubbed:no-codec")))

@@ -10,6 +10,7 @@ executor counts supplied externally.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -59,3 +60,18 @@ def get_spark(app_name: str = "lacspark", cores: int | None = None,
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def shuffle_partitions(spark: SparkSession, n: int):
+    """Run the body with ``spark.sql.shuffle.partitions`` set to ``n``,
+    restoring the session value afterwards.  A streaming aggregation
+    pins its state-store partition count from this conf at query
+    start (it lives in the checkpoint thereafter), so queries planned
+    after the restore are unaffected."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

@@ -81,19 +81,6 @@ def parse_seg_line(line: str) -> tuple[str, list[str]]:
     return "".join(words), labels
 
 
-def dedup_word_granularity_labels(labels: list[str],
-                                  seg_lengths: list[int]) -> list[str]:
-    """Drop the -I labels of chars folded into whole-word tokens
-    (reader.py:162-167): after mixed-granularity encoding a k-char
-    in-vocab word holds one position, so its k-1 trailing labels go."""
-    out: list[str] = []
-    pos = 0
-    for ln in seg_lengths:
-        out.append(labels[pos])
-        pos += ln
-    return out
-
-
 def training_rows(spark, path: str, mode: str = "lac"):
     """spark.read.text + the parser → DataFrame(text, labels).
     Arrow-batched (mapInPandas), no per-row python UDF."""

@@ -4,9 +4,16 @@ scale-shape guarantees (keeper-form pair fan-out, bucket caps)."""
 
 from __future__ import annotations
 
+import glob
+import os
+import pathlib
+import shutil
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
+
+SF = os.environ.get("LACSPARK_TEST_SF", "/root/testdata/sf0.001")
 
 
 def _write_docs(spark, tmp_path, rows):
@@ -505,9 +512,9 @@ def test_pack_budgets_agree_on_doc_universe(spark):
 
 def test_minhash_cache_does_not_collide_across_corpora(spark, tmp_path):
     """Two same-schema corpora processed in one session must each get
-    their own near-dup result: the fingerprint-table slot is keyed on
-    input-file identity (path+size+mtime), never on a plan string
-    (a canonicalized plan normalizes the path away and collided)."""
+    their own near-dup result: the cache entry is keyed on the input's
+    file identity, never on a plan string (a canonicalized plan
+    normalizes the path away and collided)."""
     from lacspark.spark.dedup import minhash_near_duplicates
 
     dup = " ".join(f"w{i % 5}" for i in range(30))
@@ -523,7 +530,7 @@ def test_minhash_cache_does_not_collide_across_corpora(spark, tmp_path):
     rb = minhash_near_duplicates(
         spark.read.parquet(f"{b}/documents.parquet"), "doc_id", "text")
     assert rb.count() == 0
-    # and back to A: correct again (slot swapped, not poisoned)
+    # and back to A: correct again (entry kept, not poisoned)
     ra2 = minhash_near_duplicates(
         spark.read.parquet(f"{a}/documents.parquet"), "doc_id", "text")
     assert [(r.d1, r.d2) for r in ra2.collect()] == [(0, 1)]
@@ -531,9 +538,10 @@ def test_minhash_cache_does_not_collide_across_corpora(spark, tmp_path):
 
 def test_minhash_cache_not_hit_by_transformed_input(spark, tmp_path):
     """A TRANSFORMED DataFrame over the same files (docs.filter(...))
-    must not return the raw scan's cached pair set: the slot key
-    includes a canonicalized-plan digest alongside the file
-    fingerprint (ADVICE r4 — file identity alone collided here)."""
+    must not return the raw scan's cached pair set: the key includes
+    a canonicalized-plan digest alongside the file identity (file
+    identity alone collided here)."""
+    from lacspark.spark import memo
     from lacspark.spark.dedup import minhash_near_duplicates
 
     dup = " ".join(f"w{i % 5}" for i in range(30))
@@ -551,10 +559,189 @@ def test_minhash_cache_not_hit_by_transformed_input(spark, tmp_path):
     assert {(r.d1, r.d2) for r in filt.collect()} == {(1, 2)}
     # and two raw scans of the same path DO share one cache entry
     # (fresh exprIds must not defeat the digest): same plan, same key
-    from lacspark.spark.dedup import input_fingerprint
-    k1 = input_fingerprint(spark.read.parquet(f"{a}/documents.parquet"))
-    k2 = input_fingerprint(spark.read.parquet(f"{a}/documents.parquet"))
+    k1 = memo.frame_key(spark.read.parquet(f"{a}/documents.parquet"))
+    k2 = memo.frame_key(spark.read.parquet(f"{a}/documents.parquet"))
     assert k1 == k2 and k1 is not None
+
+
+_DUP = " ".join(f"w{i % 5}" for i in range(30))
+# near-dup corpora: v0 pairs {0,1,2}, v1 pairs {1,3}
+_NEAR_DUP_DOCS = (
+    [(0, "en", _DUP), (1, "en", _DUP), (2, "en", _DUP),
+     (3, "en", "x y z " * 10)],
+    [(0, "en", "x y z " * 10), (1, "en", _DUP),
+     (2, "en", "p q r " * 10), (3, "en", _DUP)])
+
+
+def _flat_docs(spark, root, variant):
+    _write_docs(spark, pathlib.Path(root), _NEAR_DUP_DOCS[variant])
+
+
+def _write_partitioned(spark, path, chars):
+    rows = [(i, f"{c * 4} {c * 4}", "en" if i % 2 else "zh")
+            for i, c in enumerate(chars)]
+    (spark.createDataFrame(rows, "doc_id bigint, text string, lang string")
+     .coalesce(1).write.mode("overwrite").option("compression", "none")
+     .partitionBy("lang").parquet(path))
+
+
+def _nested_docs(spark, root, variant):
+    """documents partitioned by lang (part files one directory below
+    the table path).  Variant 1 rewrites the lang=en part file IN
+    PLACE with same-size bytes: neither the table directory's nor the
+    partition directory's own stat changes."""
+    path = f"{root}/documents.parquet"
+    if variant == 0:
+        _write_partitioned(spark, path, "abcdef")
+        return
+    _write_partitioned(spark, f"{root}.v1", "uvwxyz")
+    for pattern in ("part-*.parquet", ".part-*.parquet.crc"):
+        [old] = glob.glob(f"{path}/lang=en/{pattern}")
+        [new] = glob.glob(f"{root}.v1/lang=en/{pattern}")
+        with open(new, "rb") as fh:
+            data = fh.read()
+        st = os.stat(old)
+        assert len(data) == st.st_size
+        with open(old, "r+b") as fh:
+            fh.write(data)
+        # a stat identity needs the mtime to move; a coarse file-system
+        # clock need not tick between the two writes
+        os.utime(old, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+
+
+def _embeddings(spark, root, variant):
+    e = spark.read.parquet(f"{SF}/embeddings.parquet")
+    (e.filter("vec_id < 300" if variant == 0 else "vec_id < 250")
+     .coalesce(1).write.mode("overwrite")
+     .parquet(f"{root}/embeddings.parquet"))
+
+
+def _scan(table):
+    def read(spark, root, filt):
+        df = spark.read.parquet(f"{root}/{table}.parquet")
+        return df.filter(filt) if filt else df
+    return read
+
+
+def _root(spark, root, filt):
+    return root
+
+
+def _pq_inputs(spark, root, filt):
+    queries = spark.read.parquet(f"{root}/embeddings.parquet") \
+        .filter("vec_id < 5")
+    return queries, _scan("embeddings")(spark, root, filt)
+
+
+def _load(spark, root):
+    from lacspark.queries import load
+    return load(spark, root, "documents")
+
+
+def _pack(spark, root):
+    from lacspark.queries import SPARK_QUERIES
+    return SPARK_QUERIES["pack_sequences_bpe"](spark, root)
+
+
+def _minhash(spark, docs):
+    from lacspark.spark.dedup import minhash_near_duplicates
+    return minhash_near_duplicates(docs, "doc_id", "text")
+
+
+def _kmeans(spark, emb):
+    from lacspark.spark.similarity import kmeans_codebook
+    return kmeans_codebook(emb, "vec_id", "embedding", 64, n_lists=4,
+                           iters=1)
+
+
+def _pq_books(spark, emb):
+    from lacspark.spark.similarity import pq_codebooks
+    return pq_codebooks(emb, "vec_id", "embedding", 64, m=8, k=8,
+                        iters=1)
+
+
+def _pq_topk(spark, inputs):
+    from lacspark.spark.similarity import pq_topk
+    return pq_topk(*inputs, "vec_id", "embedding", 64, k=5, m=8,
+                   n_cents=8, iters=1, rerank=20)
+
+
+# operator: (write input, read input, run operator, cache names it
+# consults, filter over the same files — None for path inputs)
+_CACHED_OPS = {
+    "load": (_nested_docs, _root, _load, ("load:documents",), None),
+    "minhash_near_duplicates": (_flat_docs, _scan("documents"), _minhash,
+                                ("minhash_pairs",), "doc_id >= 1"),
+    "pack_sequences_bpe": (_nested_docs, _root, _pack,
+                           ("load:documents", "pack_bpe_counts"), None),
+    "kmeans_codebook": (_embeddings, _scan("embeddings"), _kmeans,
+                        ("kmeans_codebook",), "vec_id >= 200"),
+    "pq_codebooks": (_embeddings, _scan("embeddings"), _pq_books,
+                     ("pq_codebooks",), "vec_id >= 200"),
+    "pq_topk": (_embeddings, _pq_inputs, _pq_topk,
+                ("pq_codebooks", "pq_codes", "pq_vecs"), "vec_id >= 200"),
+}
+
+
+def _job_ids(spark):
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup())
+
+
+@pytest.mark.parametrize("op", sorted(_CACHED_OPS))
+def test_cache_keyed_on_input_identity(spark, tmp_path, op):
+    """Every cached operator keys its entry on the input itself.  A
+    repeat call over a fresh read of the same files is a hit that
+    starts no Spark job (pq_topk still scores its queries, so it
+    only runs fewer jobs).  A rewrite at the same path — for load(),
+    an in-place same-size rewrite of a part file in a nested
+    partition directory — and a filtered input over the same files
+    (the filtered-corpus codebook once collided with the full one)
+    both miss, and compute what a fresh run over a copy of the files
+    computes."""
+    from collections import Counter
+
+    from lacspark.spark import memo
+
+    write, read, run, names, filt = _CACHED_OPS[op]
+    root = str(tmp_path / "in")
+
+    def call(at=root, f=None):
+        inp = read(spark, at, f)
+        stats, jobs = Counter(memo.stats), _job_ids(spark)
+        value = run(spark, inp)
+        new_jobs, delta = _job_ids(spark) - jobs, memo.stats - stats
+        if hasattr(value, "collect"):
+            value = sorted(tuple(r) for r in value.collect())
+        return value, new_jobs, delta
+
+    def fresh(f=None):
+        copy = tmp_path / f"copy{len(list(tmp_path.glob('copy*')))}"
+        shutil.copytree(root, copy)
+        return call(str(copy), f)[0]
+
+    write(spark, root, 0)
+    first, first_jobs, _ = call()
+    again, jobs, delta = call()
+    assert again == first
+    assert all(delta[n, "hit"] for n in names), delta
+    assert not any(delta[n, "miss"] for n in names), delta
+    if op == "pq_topk":
+        assert len(jobs) < len(first_jobs), (jobs, first_jobs)
+    else:
+        assert not jobs, jobs
+
+    if filt is not None:
+        got, _, delta = call(f=filt)
+        assert all(delta[n, "miss"] for n in names), delta
+        assert got != first
+        assert got == fresh(filt)
+
+    write(spark, root, 1)
+    got, _, delta = call()
+    assert all(delta[n, "miss"] for n in names), delta
+    assert got == fresh()
 
 
 def test_ratio_round_matches_exact_decimal_half_up(spark):
