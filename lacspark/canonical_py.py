@@ -41,6 +41,19 @@ def _grams(form: str) -> frozenset[str]:
     return frozenset(form[i:i + width] for i in range(max(ln - 2, 1)))
 
 
+def band_keys(form: str, num_hashes: int = 8,
+              band_size: int = 2) -> list[str]:
+    """≡ ``minhash_bands``: the LSH band keys of one form's md5
+    minhash signature, band 0 first."""
+    grams = _grams(form)
+    sig = [min(md5int(f"c{i}:{g}") for g in grams)
+           for i in range(num_hashes)]
+    return [hashlib.md5(
+        ",".join([str(b)] + [str(sig[b * band_size + j])
+                             for j in range(band_size)]).encode()
+    ).hexdigest() for b in range(num_hashes // band_size)]
+
+
 def canonical_map_py(words: list[str], num_hashes: int = 8,
                      band_size: int = 2, jaccard_threshold: float = 0.5,
                      max_bucket: int = 1000,
@@ -52,17 +65,9 @@ def canonical_map_py(words: list[str], num_hashes: int = 8,
     max_bucket, n_rows_dropped member rows)."""
     forms = sorted({f for f in (_form(w) for w in words) if len(f) >= 2})
     grams = {f: _grams(f) for f in forms}
-    sigs = {
-        f: [min(md5int(f"c{i}:{g}") for g in grams[f])
-            for i in range(num_hashes)]
-        for f in forms}
     buckets: dict[str, list[str]] = defaultdict(list)
     for f in forms:
-        for b in range(num_hashes // band_size):
-            key = hashlib.md5(
-                ",".join([str(b)] + [str(sigs[f][b * band_size + j])
-                                     for j in range(band_size)])
-                .encode()).hexdigest()
+        for key in band_keys(f, num_hashes, band_size):
             buckets[key].append(f)
     pairs: set[tuple[str, str]] = set()
     n_units_capped = n_rows_dropped = 0

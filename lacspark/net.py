@@ -81,6 +81,8 @@ class BiGruCrf:
             prevs[r, : len(p)] = p
             prevs[r, len(p):] = p[-1]  # pad by repeating (ties safe)
         self._sparse_prevs = prevs  # [S, k]
+        # the Viterbi loop unrolls exactly two predecessor columns
+        assert self._sparse_prevs.shape[1] == 2
         self._sparse_trans = self.w["crf_trans"][
             prevs, self._sparse_cols[:, None]].astype(np.float32) \
             if prevs.size else np.zeros((0, k), dtype=np.float32)

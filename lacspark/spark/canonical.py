@@ -6,16 +6,23 @@ arrays per surface form, k hash functions as md5 of a per-function
 salt + gram (first 15 hex digits as int64 — identical arithmetic is
 reproducible in DuckDB and pure python, which is how the golden-
 parquet oracles for the KG queries are generated), reduced with
-``array_min`` inside a projection.  Banding turns similarity search
-into an equi-join on band keys; candidate pairs are verified with
-exact n-gram Jaccard (array_intersect/array_union on the carried
-gram arrays).  Everything is seeded/deterministic — no rand(), no
-iteration-order dependence (SURVEY §4.2 custom work (d)).
+``array_min`` inside a projection.  Candidates come from ONE pass
+over the band table: a window counts every band bucket (oversized
+buckets are dropped before anything is collected), the surviving
+rows, already partitioned by band, are collected per bucket, and each
+bucket emits its i<j pairs (bucket-local generation as in CPSJoin) —
+no self-join, so the minhash projection runs once.  Pairs are
+verified with exact n-gram Jaccard (array_intersect/array_union on
+the carried gram arrays).  Everything is seeded/deterministic — no
+rand(), no iteration-order dependence (SURVEY §4.2 custom work (d)).
 
-Connected components: iterative min-label propagation over the
-similarity edges (small-step joins + localCheckpoint, GraphFrames not
-assumed).  Canonical id of a component = lexicographic min surface
-form — deterministic under any parallelism.
+Connected components: below a size threshold the edges are collected
+and union-found on the driver, and the endpoint labels are broadcast-
+joined back onto the vertices; above it, large-star/small-star rounds
+to a verified fixpoint (GraphFrames not assumed).  Canonical id of a
+component = lexicographic min surface form — deterministic under any
+parallelism.  Frames built on the driver ship to the JVM as Arrow
+batches, so the chain starts no Python worker.
 """
 
 from __future__ import annotations
@@ -70,30 +77,56 @@ def minhash_bands(forms: DataFrame, num_hashes: int = 8,
 
 def candidate_pairs(banded: DataFrame, jaccard_threshold: float = 0.5,
                     max_bucket: int = 1000) -> DataFrame:
-    """Self-join within band buckets → verified similarity edges.
+    """Band buckets → verified similarity edges, in one pass over the
+    band table (bucket-local candidate generation as in CPSJoin).
 
-    Buckets larger than ``max_bucket`` are dropped (a bucket that
-    big means a degenerate band — at 10^12-file scale it would
-    quadratically explode; the dropped forms still canonicalize to
-    themselves).  AQE skew-join splitting handles the rest.
+    The cap window counts every bucket first; buckets larger than
+    ``max_bucket`` are dropped BEFORE anything is collected, so a
+    degenerate band (millions of forms at corpus scale) never becomes
+    one array — the window buffer spills instead.  The dropped forms
+    still canonicalize to themselves.  The window leaves the rows
+    hash-partitioned by band, so the per-bucket collect reads them
+    without a second exchange; each bucket then emits its i<j pairs,
+    which are verified with exact Jaccard and deduplicated (a pair
+    can share several bands).
     """
     from .dedup import cap_filter
     small = cap_filter("canonical_candidate_pairs", banded, ["band"],
                        max_bucket, "minhash band buckets")
-    a = small.alias("a")
-    b = small.alias("b")
-    pairs = (a.join(b, on="band")
-             .filter(F.col("a.form") < F.col("b.form"))
+    # sorted by form: position i < j means src <= dst, equal only if
+    # the input repeats a (band, form) row
+    buckets = (small.groupBy("band")
+               .agg(F.array_sort(F.collect_list(F.struct("form", "grams")))
+                    .alias("m"))
+               .filter(F.size("m") > 1))
+    pairs = (buckets
+             .select("m", F.explode(F.sequence(F.lit(1), F.size("m") - 1))
+                     .alias("i"))
+             .select("m", "i", F.explode(F.sequence(F.col("i") + 1,
+                                                    F.size("m")))
+                     .alias("j"))
+             .select(F.expr("element_at(m, i)").alias("a"),
+                     F.expr("element_at(m, j)").alias("b"))
              .select(F.col("a.form").alias("src"),
                      F.col("b.form").alias("dst"),
                      F.col("a.grams").alias("g1"),
                      F.col("b.grams").alias("g2"))
-             .dropDuplicates(["src", "dst"]))
+             .filter(F.col("src") < F.col("dst")))
     jac = (F.size(F.array_intersect("g1", "g2")) /
            F.size(F.array_union("g1", "g2")))
-    return (pairs.withColumn("jaccard", jac)
+    # verify before deduplicating: jaccard is a function of the pair,
+    # and the dedup shuffle then carries no gram arrays
+    return (pairs.select("src", "dst", jac.alias("jaccard"))
             .filter(F.col("jaccard") >= jaccard_threshold)
-            .select("src", "dst", "jaccard"))
+            .distinct())
+
+
+def _local_frame(spark, cols: dict[str, list], schema: str) -> DataFrame:
+    """A driver-built frame shipped to the JVM as Arrow batches.  A
+    list of tuples would go through a pickled-row RDD, i.e. a Python
+    worker task, just to hand the JVM rows the driver already has."""
+    import pandas as pd
+    return spark.createDataFrame(pd.DataFrame(cols), schema)
 
 
 def connected_components(vertices: DataFrame, edges: DataFrame,
@@ -105,45 +138,61 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     vertices: (form), edges: (src, dst).
 
     Scale split: below ``driver_threshold`` edges the component graph
-    is broadcast-scale — collect and union-find on the driver (one
-    job instead of a multi-round distributed loop; results identical
-    and deterministic).  Above it, alternating large-star/small-star
-    rounds (the public MapReduce CC formulation: each round every
-    node links its neighbors to its neighborhood minimum), which
-    converges to star graphs in O(log n) rounds REGARDLESS of
-    component diameter — a million-node alias chain finishes in ~20
-    rounds where min-label propagation would need a million.  The
-    loop runs to a verified fixpoint (edge set unchanged), never
-    returning partially-converged labels; ``max_iter`` is a runaway
-    guard that raises rather than silently mislabeling.
+    is broadcast-scale — collect the edges and union-find them on the
+    driver (one job instead of a multi-round distributed loop; results
+    identical and deterministic), then broadcast-join the endpoint
+    labels back onto ``vertices``, whose size does not matter.  Above
+    it, alternating large-star/small-star rounds (the public
+    MapReduce CC formulation: each round every node links its
+    neighbors to its neighborhood minimum), which converges to star
+    graphs in O(log n) rounds REGARDLESS of component diameter — a
+    million-node alias chain finishes in ~20 rounds where min-label
+    propagation would need a million.  The loop runs to a verified
+    fixpoint (edge set unchanged), never returning partially-converged
+    labels; ``max_iter`` is a runaway guard that raises rather than
+    silently mislabeling.
     """
     # probe-by-collect: the limit(threshold+1) collect IS the size
     # probe AND the data fetch — one job each instead of count+collect
     edge_rows = edges.select("src", "dst") \
         .limit(driver_threshold + 1).collect()
-    vert_rows = (vertices.limit(driver_threshold + 1).collect()
-                 if len(edge_rows) <= driver_threshold else [])
-    if len(edge_rows) <= driver_threshold and \
-            len(vert_rows) <= driver_threshold:
-        spark = vertices.sparkSession
-        parent: dict[str, str] = {}
+    if len(edge_rows) <= driver_threshold:
+        labels = F.broadcast(_driver_labels(vertices.sparkSession,
+                                            edge_rows))
+    else:
+        labels = _star_labels(edges, max_iter)
+    return (vertices.join(labels, "form", "left")
+            .select("form", F.coalesce("canonical", "form")
+                    .alias("canonical")))
 
-        def find(x: str) -> str:
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
 
-        for r in edge_rows:
-            ra, rb = find(r.src), find(r.dst)
-            if ra != rb:
-                # deterministic: smaller label becomes the root
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        rows = [(r.form, find(r.form)) for r in vert_rows]
-        return spark.createDataFrame(rows, "form string, canonical string")
+def _driver_labels(spark, edge_rows: list) -> DataFrame:
+    """(form, canonical) for every edge endpoint, by union-find."""
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:
+            parent[x], x = root, parent[x]
+        return root
+
+    for r in edge_rows:
+        ra, rb = find(r.src), find(r.dst)
+        if ra != rb:
+            # deterministic: smaller label becomes the root
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    ends = sorted({x for r in edge_rows for x in (r.src, r.dst)})
+    return _local_frame(spark, {"form": ends,
+                                "canonical": [find(x) for x in ends]},
+                        "form string, canonical string")
+
+
+def _star_labels(edges: DataFrame, max_iter: int) -> DataFrame:
+    """(form, canonical) for every non-root vertex, by large-star/
+    small-star rounds run to a verified fixpoint."""
     # Orient every edge (hi, lo); both star operations preserve the
     # orientation, so `lo` is always the smaller label.
     e = (edges.select(F.greatest("src", "dst").alias("hi"),
@@ -183,11 +232,8 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
             f"large/small-star rounds — refusing to return partial "
             f"labels (graph has ~{n_prev} star edges)")
     # stars: every non-root points straight at its component min
-    return (vertices.join(e.select(F.col("hi").alias("form"),
-                                   F.col("lo").alias("canonical")),
-                          "form", "left")
-            .select("form", F.coalesce("canonical", "form")
-                    .alias("canonical")))
+    return e.select(F.col("hi").alias("form"),
+                    F.col("lo").alias("canonical"))
 
 
 def canonical_map(mentions: DataFrame, word_col: str = "word",
@@ -236,13 +282,16 @@ def canonical_map(mentions: DataFrame, word_col: str = "word",
         _register_cap_audit(
             "canonical_candidate_pairs", 1000, "minhash band buckets",
             counts=(audit["n_units_capped"], audit["n_rows_dropped"]))
-        rows = [(f, c, eid) for f, (c, eid) in sorted(cmap.items())]
+        keys = sorted(cmap)
         forms.unpersist()
-        return spark.createDataFrame(
-            rows, "form string, canonical string, entity_id long")
+        return _local_frame(
+            spark, {"form": keys,
+                    "canonical": [cmap[f][0] for f in keys],
+                    "entity_id": [cmap[f][1] for f in keys]},
+            "form string, canonical string, entity_id long")
     banded = minhash_bands(forms, num_hashes, band_size)
-    # CC probes the edge count and then reads edges again (driver
-    # union-find or per-iteration joins) — materialize once
+    # CC's probe collect reads the edges, and its star branch reads
+    # them again — materialize once
     edges = candidate_pairs(banded, jaccard_threshold).persist()
     comp = connected_components(forms.select("form"), edges)
     comp = comp.localCheckpoint()  # cut lineage before unpersisting

@@ -43,7 +43,9 @@ def build_vertices(mentions: DataFrame, cmap: DataFrame,
                  F.sum("rank").alias("salience"),
                  F.slice(F.array_sort(F.collect_set(F.lower(F.trim("word")))),
                          1, max_aliases).alias("aliases"),
-                 F.countDistinct("tag").alias("n_tags"),
+                 # size(collect_set) ignores nulls like countDistinct but
+                 # needs no extra distinct-aggregation stages
+                 F.size(F.collect_set("tag")).cast("long").alias("n_tags"),
                  F.max("tag").alias("top_tag"))
             .withColumnRenamed("entity_canonical", "canonical"))
 

@@ -2,9 +2,12 @@
 
 AQE (coalesce + skew-join split), Arrow-batched python UDF transfer
 (the reference's LoD ragged batching ≙ Arrow list arrays, SURVEY §4.1),
-and a shuffle-partition default sized for local[N] testing.  On a real
-cluster the same builder runs under spark-submit --py-files with
-executor counts supplied externally.
+and a shuffle-partition default of 2 x cores: local[4] gets 8,
+local[32] gets 64.  There is no floor — a persisted intermediate keeps
+its partition count (AQE does not coalesce cached plans), so every
+later scan of it pays one task per partition.  On a real cluster the
+same builder runs under spark-submit --py-files with executor counts
+supplied externally.
 """
 
 from __future__ import annotations
@@ -21,7 +24,7 @@ def get_spark(app_name: str = "lacspark", cores: int | None = None,
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
-        shuffle_partitions = max(2 * cores, 32)
+        shuffle_partitions = 2 * cores
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")

@@ -171,3 +171,24 @@ def test_pq_encode_is_pure_projection(spark):
                              books, 64)).lower()
     assert "hashpartitioning" not in plan
     assert "python" not in plan  # all JVM-side expressions
+
+
+def test_canonical_candidates_one_band_pass(spark):
+    """candidate_pairs builds pairs inside each band bucket: the band
+    table (minhash projection, band explode, cap window) is computed
+    once — one Exchange on the band key and no join of two band-table
+    subtrees."""
+    from lacspark.spark.canonical import (candidate_pairs, minhash_bands,
+                                          surface_forms)
+
+    words = spark.createDataFrame(
+        [("spark_table",), ("spark_tables",), ("query_merge",), ("zzz",)],
+        "word string")
+    plan = plan_of(candidate_pairs(minhash_bands(surface_forms(words))))
+    assert plan.count("Exchange hashpartitioning(band#") == 1
+    assert "Join" not in plan
+    assert plan.count("array_min(") == 8  # one signature projection
+    # the cap filter sits between the bucket count and the collect:
+    # an oversized bucket is counted and dropped, never collected
+    assert plan.index("collect_list") < plan.index("Filter (__n") \
+        < plan.index("Window [count(1)")

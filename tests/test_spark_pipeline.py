@@ -122,6 +122,77 @@ def test_connected_components_chain(spark):
             for r in connected_components(verts, edges,
                                           driver_threshold=0).collect()}
     assert dist == expected
+    # more vertices than driver_threshold but few edges: the driver
+    # branch labels the edge endpoints and joins the rest back
+    few = {r.form: r.canonical
+           for r in connected_components(verts, edges,
+                                         driver_threshold=3).collect()}
+    assert few == expected
+
+
+def test_candidate_pairs_match_bruteforce_reference(spark):
+    """Bucket-local pair generation equals a brute-force all-pairs
+    reference built on the canonical_py hash family, and a bucket over ``max_bucket`` is dropped with its
+    unit and row counts in the cap audit.  The planted bucket: "abc"
+    plus one-char extensions that keep its band-0 key but own a
+    minhash in every other band, so exactly one bucket is oversized."""
+    from itertools import combinations
+
+    from lacspark.canonical_py import _grams, band_keys
+    from lacspark.spark.dedup import cap_audit_rows
+
+    base = band_keys("abc")
+    hot = ["abc"] + [
+        f for f in (f"abc{chr(0x4e00 + i)}" for i in range(40))
+        if (k := band_keys(f))[0] == base[0]
+        and all(k[b] != base[b] for b in (1, 2, 3))]
+    assert len(hot) >= 4
+    aliases = ["spark_table", "spark_tables", "query_merge", "querymerge",
+               "dataframe", "dataframes", "data_frame", "zzz", "zzzz"]
+    forms = sorted(set(hot + aliases))
+    keys = {f: band_keys(f) for f in forms}
+    members: dict[str, set[str]] = {}
+    for f, ks in keys.items():
+        for k in ks:
+            members.setdefault(k, set()).add(f)
+    cap = len(hot) - 1
+    oversized = [k for k, m in members.items() if len(m) > cap]
+    assert oversized == [base[0]]
+
+    banded = minhash_bands(surface_forms(
+        spark.createDataFrame([(f,) for f in forms], "word string")))
+    for threshold in (0.0, 0.5):
+        want = set()
+        for a, b in combinations(forms, 2):
+            shared = set(keys[a]) & set(keys[b])
+            if any(len(members[k]) <= cap for k in shared):
+                ga, gb = _grams(a), _grams(b)
+                jac = len(ga & gb) / len(ga | gb)
+                if jac >= threshold:
+                    want.add((a, b, jac))
+        got = {tuple(r) for r in
+               candidate_pairs(banded, threshold, max_bucket=cap).collect()}
+        assert got == want
+        # the hot forms meet only in the dropped bucket
+        assert want and not any(a in hot and b in hot for a, b, _ in got)
+        audit = [r for r in cap_audit_rows()
+                 if r["op"] == "canonical_candidate_pairs"]
+        assert audit == [{"op": "canonical_candidate_pairs", "cap": cap,
+                          "unit": "minhash band buckets",
+                          "n_units_capped": 1, "n_rows_dropped": len(hot)}]
+
+
+def test_canonical_map_no_forms_both_paths(spark):
+    """No form of two or more chars: the driver and the distributed
+    path both return an empty map with the same schema."""
+    mentions = spark.createDataFrame([("a",), (" b ",), ("",), (None,)],
+                                     "word string")
+    fast = canonical_map(mentions)
+    slow = canonical_map(mentions, driver_threshold=0)
+    assert fast.collect() == [] and slow.collect() == []
+    assert fast.schema == slow.schema
+    assert [f.name for f in fast.schema] == ["form", "canonical",
+                                             "entity_id"]
 
 
 def test_connected_components_long_chain_and_random(spark):
